@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import re
 
-import numpy as np
 import pandas as pd
 
 MAX_HTML_BYTES = 10 * 1024 * 1024  # reference: DefaultMaxFileSize, scanner.go:37
@@ -78,20 +77,19 @@ def html_to_text(html: bytes | None) -> str | None:
     return _RE_WS.sub(" ", s).strip()
 
 
-def extract_batch(html: pd.Series) -> pd.DataFrame:
-    """Batch kernel: Series[bytes] -> DataFrame(text, extract_error)."""
-    texts, errs = [], []
-    for h in html:
-        if h is None:
-            texts.append(None)
-            errs.append("null_html")
-        elif len(h) > MAX_HTML_BYTES:
-            texts.append(None)
-            errs.append("oversize")
-        else:
-            texts.append(html_to_text(h))
-            errs.append(None)
-    return pd.DataFrame({"text": pd.array(texts, dtype="string"), "extract_error": pd.array(errs, dtype="string")})
+def extract_batch(html) -> pd.DataFrame:
+    """Batch kernel: html bytes -> DataFrame(text, extract_error).
+
+    Both columns are object dtype holding ``None``, never ``pd.NA``, so they
+    feed ``geoparse.mentions_batch`` and the Arrow channel as they are. The
+    error class is read off ``html_to_text``'s one NULL/oversize check."""
+    html = list(html)
+    texts = [html_to_text(h) for h in html]
+    errs = [
+        None if t is not None else "null_html" if h is None else "oversize"
+        for h, t in zip(html, texts)
+    ]
+    return pd.DataFrame({"text": texts, "extract_error": errs}, dtype=object)
 
 
 def with_extracted_text(df, html_col: str = "html", out_col: str = "text",
@@ -121,10 +119,8 @@ def with_extracted_text(df, html_col: str = "html", out_col: str = "text",
         for pdf in batches:
             res = extract_batch(pdf[html_col])
             out = pdf[keep_names].copy()
-            out[out_col] = res["text"].astype(object).where(res["text"].notna(), None)
-            out["extract_error"] = res["extract_error"].astype(object).where(
-                res["extract_error"].notna(), None
-            )
+            out[out_col] = res["text"].to_numpy()
+            out["extract_error"] = res["extract_error"].to_numpy()
             yield out
 
     return df.mapInPandas(run, out_schema)

@@ -1,5 +1,5 @@
 """The fused flagship kernel: html -> text -> mentions -> tiles -> PIP in ONE
-Arrow stage.
+Python stage.
 
 Why fused (measured, scripts/scaling_bench.py history): Spark pipelines a
 narrow chain of mapInPandas stages into a single task stage with one Python
@@ -11,12 +11,13 @@ rollup stays JVM-side. This is the idiomatic shape for a 10^12-row pipeline:
 
     scan -> [ONE vectorized Python stage] -> JVM shuffle/agg
 
-The kernel composes the already-golden-tested pure kernels (html_to_text,
-parse_mentions, hexgrid.latlon_to_cell, pip.match_points) — byte-identical
-results to the staged pipeline, proven in tests/test_fused.py. The staged
-(manifest) pipeline never hits the chaining issue because each stage
-materializes to parquet (separate jobs); use fused for single-pass
-throughput, staged for resumable production runs.
+The kernel chains the same batch functions the staged (manifest) pipeline
+runs one stage each — extract.extract_batch, geoparse.mentions_batch and
+pip.admin_ids — so the two paths cannot drift apart. Tiles are numpy
+hexgrid.latlon_to_cell here and SQL in the staged path; tests/test_fused.py
+proves the two pipelines row-identical. The staged pipeline never hits the
+chaining problem because each stage materializes to parquet (separate jobs);
+use fused for single-pass throughput, staged for resumable production runs.
 """
 
 from __future__ import annotations
@@ -25,9 +26,9 @@ import numpy as np
 import pandas as pd
 
 from core_spark.functions import hexgrid as hx
-from core_spark.functions.extract import html_to_text
-from core_spark.functions.geoparse import parse_mentions
-from core_spark.operators.pip import _fingerprint, match_points
+from core_spark.functions.extract import extract_batch
+from core_spark.functions.geoparse import mentions_batch
+from core_spark.operators.pip import admin_ids, polygon_payload
 
 FUSED_SCHEMA = (
     "doc_id bigint, url string, lang string, mention_idx int, "
@@ -41,130 +42,33 @@ RESOLUTIONS = (5, 6, 7, 8, 9)
 
 def fused_batch(pdf: pd.DataFrame, payload, payload_fp: int) -> pd.DataFrame:
     """Pure batch kernel: corpus rows -> mention rows with tiles + admin."""
-    doc_ids, urls, langs, midx, lats, lons, kinds = [], [], [], [], [], [], []
-    for did, url, lang, html in zip(
-        pdf["doc_id"], pdf["url"], pdf["lang"], pdf["html"]
-    ):
-        text = html_to_text(html)
-        if text is None:
-            continue
-        for i, m in enumerate(parse_mentions(text)):
-            doc_ids.append(did)
-            urls.append(url)
-            langs.append(lang)
-            midx.append(i)
-            lats.append(m["lat"])
-            lons.append(m["lon"])
-            kinds.append(m["kind"])
-
-    lat_a = np.asarray(lats, dtype=np.float64)
-    lon_a = np.asarray(lons, dtype=np.float64)
+    m = mentions_batch(extract_batch(pdf["html"])["text"])
+    rows = m["row"]
+    lat, lon = m["lat"], m["lon"]
     out = {
-        "doc_id": pd.array(doc_ids, dtype="int64"),
-        "url": urls,
-        "lang": langs,
-        "mention_idx": pd.array(midx, dtype="int32"),
-        "lat": lat_a,
-        "lon": lon_a,
-        "kind": kinds,
+        "doc_id": pd.array(pdf["doc_id"].to_numpy()[rows], dtype="int64"),
+        "url": pdf["url"].to_numpy()[rows],
+        "lang": pdf["lang"].to_numpy()[rows],
+        "mention_idx": m["mention_idx"],
+        "lat": lat,
+        "lon": lon,
+        "kind": m["kind"],
     }
     for res in RESOLUTIONS:
-        cells = hx.latlon_to_cell(lat_a, lon_a, res).astype(np.int64)
+        cells = hx.latlon_to_cell(lat, lon, res).astype(np.int64)
         out[f"h3_r{res}"] = pd.arrays.IntegerArray(cells, mask=(cells == -1))
-    aid = match_points(lon_a, lat_a, payload, fp=payload_fp).astype(np.int64)
-    out["admin_id"] = pd.arrays.IntegerArray(aid, mask=(aid == -1))
+    out["admin_id"] = admin_ids(lon, lat, payload, payload_fp)
     return pd.DataFrame(out)
 
 
 def fused_pipeline(docs_df, polygons: pd.DataFrame):
     """docs (doc_id,url,html,lang) -> mention rows (FUSED_SCHEMA)."""
-    payload = [(int(r.admin_id), [list(ring) for ring in r.rings]) for r in polygons.itertuples()]
-    fp = _fingerprint(payload)
+    payload, fp = polygon_payload(polygons)
 
     def run(batches):
         for pdf in batches:
             yield fused_batch(pdf, payload, fp)
 
     return docs_df.select("doc_id", "url", "lang", "html").mapInPandas(
-        run, FUSED_SCHEMA
-    )
-
-
-def _arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("doc_id", pa.int64()),
-            ("url", pa.string()),
-            ("lang", pa.string()),
-            ("mention_idx", pa.int32()),
-            ("lat", pa.float64()),
-            ("lon", pa.float64()),
-            ("kind", pa.string()),
-            *[(f"h3_r{res}", pa.int64()) for res in RESOLUTIONS],
-            ("admin_id", pa.int64()),
-        ]
-    )
-
-
-def fused_batch_arrow(batch, payload, payload_fp):
-    """fused_batch without the pandas detour: RecordBatch in, RecordBatch out.
-
-    Same per-document loop and the same vectorized tile/PIP tail, but the
-    input columns come off the Arrow buffers as plain Python lists (cheaper
-    to iterate than object Series) and the output skips pandas block
-    construction entirely — rows go numpy -> Arrow. Row-identical to
-    fused_batch (tests/test_fused.py)."""
-    import pyarrow as pa
-
-    doc_ids, urls, langs, midx, lats, lons, kinds = [], [], [], [], [], [], []
-    for did, url, lang, html in zip(
-        batch.column("doc_id").to_pylist(),
-        batch.column("url").to_pylist(),
-        batch.column("lang").to_pylist(),
-        batch.column("html").to_pylist(),
-    ):
-        text = html_to_text(html)
-        if text is None:
-            continue
-        for i, m in enumerate(parse_mentions(text)):
-            doc_ids.append(did)
-            urls.append(url)
-            langs.append(lang)
-            midx.append(i)
-            lats.append(m["lat"])
-            lons.append(m["lon"])
-            kinds.append(m["kind"])
-
-    lat_a = np.asarray(lats, dtype=np.float64)
-    lon_a = np.asarray(lons, dtype=np.float64)
-    arrays = [
-        pa.array(doc_ids, pa.int64()),
-        pa.array(urls, pa.string()),
-        pa.array(langs, pa.string()),
-        pa.array(midx, pa.int32()),
-        pa.array(lat_a),
-        pa.array(lon_a),
-        pa.array(kinds, pa.string()),
-    ]
-    for res in RESOLUTIONS:
-        cells = hx.latlon_to_cell(lat_a, lon_a, res).astype(np.int64)
-        arrays.append(pa.array(cells, mask=(cells == -1)))
-    aid = match_points(lon_a, lat_a, payload, fp=payload_fp).astype(np.int64)
-    arrays.append(pa.array(aid, mask=(aid == -1)))
-    return pa.RecordBatch.from_arrays(arrays, schema=_arrow_schema())
-
-
-def fused_pipeline_arrow(docs_df, polygons: pd.DataFrame):
-    """fused_pipeline via mapInArrow — identical rows, no pandas bridge."""
-    payload = [(int(r.admin_id), [list(ring) for ring in r.rings]) for r in polygons.itertuples()]
-    fp = _fingerprint(payload)
-
-    def run(batches):
-        for batch in batches:
-            yield fused_batch_arrow(batch, payload, fp)
-
-    return docs_df.select("doc_id", "url", "lang", "html").mapInArrow(
         run, FUSED_SCHEMA
     )

@@ -8,11 +8,12 @@ plus gazetteer place names resolved against a broadcast lookup table.
 
 Two execution paths, same semantics:
   * JVM path (hot, 100-TB scale): `regexp_extract_all` Column expressions for
-    dec/geo — whole-stage codegen, predicate-pushdown friendly, and the exact
-    same SQL runs on DuckDB for the oracle. The regex is deliberately written
-    in the common RE2/Java/ICU-compatible subset.
+    the dec kind — whole-stage codegen, predicate-pushdown friendly, and the
+    exact same SQL runs on DuckDB for the oracle. The regex is deliberately
+    written in the common RE2/Java/ICU-compatible subset.
   * Kernel path: pure-Python `parse_mentions` (incl. DMS arithmetic) for unit
-    tests, goldens, and the mapInPandas variant.
+    tests, goldens, and the batch kernel ``mentions_batch`` that both the
+    staged ``with_mentions`` stage and the fused kernel run.
 
 Reference analog: the per-language regex import extraction
 (pkg/parser/detection/extraction/*.go) — same "regex battery over document
@@ -23,6 +24,7 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 import pandas as pd
 
 # ---------------------------------------------------------------------------
@@ -112,7 +114,7 @@ def with_places(df, names: list[str], text_col: str = "text",
 
 
 # ---------------------------------------------------------------------------
-# SQL emission (dec + geo kinds): same string for Spark F.expr and DuckDB
+# SQL emission (dec kind): same string for Spark F.expr and DuckDB
 # ---------------------------------------------------------------------------
 
 def sql_dec_mentions(text_col: str) -> tuple[str, str]:
@@ -126,17 +128,38 @@ def sql_dec_mentions(text_col: str) -> tuple[str, str]:
     return lat, lon
 
 
-def sql_geo_mentions(text_col: str) -> tuple[str, str]:
-    lat = f"regexp_extract_all({text_col}, '{GEO_URI_PATTERN}', 1)"
-    lon = f"regexp_extract_all({text_col}, '{GEO_URI_PATTERN}', 2)"
-    return lat, lon
-
-
 # ---------------------------------------------------------------------------
 # Spark stage (all kinds, incl. DMS): Arrow-batched mapInPandas
 # ---------------------------------------------------------------------------
 
 MENTION_SCHEMA = "mention_idx int, lat double, lon double, kind string, start_byte int, end_byte int"
+
+
+def mentions_batch(texts) -> dict[str, np.ndarray]:
+    """Batch kernel: texts -> one entry per mention, as columns.
+
+    ``row`` is the position of the mention's text in ``texts``; callers
+    gather their per-document columns with one take on it. The other
+    columns are MENTION_SCHEMA's. ``None`` texts yield no mention."""
+    rows, midx, lats, lons, kinds, starts, ends = [], [], [], [], [], [], []
+    for j, text in enumerate(texts):
+        for i, m in enumerate(parse_mentions(text)):
+            rows.append(j)
+            midx.append(i)
+            lats.append(m["lat"])
+            lons.append(m["lon"])
+            kinds.append(m["kind"])
+            starts.append(m["start"])
+            ends.append(m["end"])
+    return {
+        "row": np.asarray(rows, dtype=np.intp),
+        "mention_idx": np.asarray(midx, dtype=np.int32),
+        "lat": np.asarray(lats, dtype=np.float64),
+        "lon": np.asarray(lons, dtype=np.float64),
+        "kind": np.asarray(kinds, dtype=object),
+        "start_byte": np.asarray(starts, dtype=np.int32),
+        "end_byte": np.asarray(ends, dtype=np.int32),
+    }
 
 
 def with_mentions(df, text_col: str = "text", key_cols: tuple[str, ...] = ("url",)):
@@ -159,17 +182,8 @@ def with_mentions(df, text_col: str = "text", key_cols: tuple[str, ...] = ("url"
 
     def run(batches):
         for pdf in batches:
-            rows = []
-            key_arrays = [pdf[k].to_numpy() for k in keys]
-            for j, text in enumerate(pdf[text_col].to_numpy()):
-                kvals = tuple(a[j] for a in key_arrays)
-                for i, m in enumerate(parse_mentions(text)):
-                    rows.append(
-                        kvals + (i, m["lat"], m["lon"], m["kind"], m["start"], m["end"])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=keys + ["mention_idx", "lat", "lon", "kind", "start_byte", "end_byte"],
-            )
+            m = mentions_batch(pdf[text_col])
+            rows = m.pop("row")
+            yield pd.DataFrame({**{k: pdf[k].to_numpy()[rows] for k in keys}, **m})
 
     return df.select(*keys, text_col).mapInPandas(run, out_schema)

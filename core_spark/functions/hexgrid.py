@@ -436,8 +436,3 @@ def cell_col(lat_col: str, lon_col: str, res: int):
 
     return F.expr(sql_cell(lat_col, lon_col, res))
 
-
-def parent_col(cell_col_name: str):
-    from pyspark.sql import functions as F
-
-    return F.expr(sql_cell_to_parent(cell_col_name))

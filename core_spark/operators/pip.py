@@ -44,6 +44,13 @@ def _fingerprint(payload) -> int:
     return zlib.crc32(repr(payload).encode()) & 0xFFFFFFFF
 
 
+def polygon_payload(polygons: pd.DataFrame) -> tuple[list, int]:
+    """Polygon table (admin_id, rings) -> (payload, fingerprint): the plain
+    lists ``match_points`` takes, and their content hash."""
+    payload = [(int(r.admin_id), [list(ring) for ring in r.rings]) for r in polygons.itertuples()]
+    return payload, _fingerprint(payload)
+
+
 def _normalize_entry(rings) -> list[np.ndarray]:
     """Accept one ring (list of (x, y)) or several (list of rings)."""
     first = rings[0]
@@ -136,6 +143,13 @@ def match_points(
     return out
 
 
+def admin_ids(lons, lats, payload, fp: int) -> pd.arrays.IntegerArray:
+    """``match_points`` as the ``admin_id`` column: NULL where no polygon
+    contains the point."""
+    aid = match_points(lons, lats, payload, fp=fp)
+    return pd.arrays.IntegerArray(aid, mask=aid == -1)
+
+
 def pip_join(
     df,
     polygons: pd.DataFrame,
@@ -145,12 +159,11 @@ def pip_join(
 ):
     """Append ``admin_id`` (long, NULL if outside every polygon) to ``df``.
 
-    ``polygons``: pandas DataFrame with columns (admin_id, ring) — collected
+    ``polygons``: pandas DataFrame with columns (admin_id, rings) — collected
     on the driver (small side) and shipped inside the UDF closure, which Spark
     broadcasts with the task binary exactly once per executor.
     """
-    payload = [(int(r.admin_id), [list(ring) for ring in r.rings]) for r in polygons.itertuples()]
-    fp = _fingerprint(payload)
+    payload, fp = polygon_payload(polygons)
     fields = ", ".join(f.name + " " + f.dataType.simpleString() for f in df.schema.fields)
     out_schema = fields + ", admin_id bigint"
 
@@ -158,11 +171,8 @@ def pip_join(
         for pdf in batches:
             lats = pdf[lat_col].to_numpy(dtype=np.float64)
             lons = pdf[lon_col].to_numpy(dtype=np.float64)
-            aid = match_points(lons, lats, payload, fp=fp)
             out = pdf.copy()
-            out["admin_id"] = pd.array(
-                [None if a == -1 else int(a) for a in aid], dtype="Int64"
-            )
+            out["admin_id"] = admin_ids(lons, lats, payload, fp)
             yield out
 
     joined = df.mapInPandas(run, out_schema)

@@ -16,6 +16,13 @@ detect -> parse -> extract -> aggregate) mapped to Spark:
     pip      G5 broadcast STRtree ray-cast join      [UDF stage 3]
     zonal    G7/G8 per-cell rollups, two-phase agg   (no UDF)
 
+Each UDF stage calls the same batch function as the fused kernel
+(functions/fused.py): extract runs ``extract.extract_batch``, mentions runs
+``geoparse.mentions_batch`` and pip runs ``pip.admin_ids``, so the staged and
+fused paths share one implementation per layer. Only tiles differ: the staged
+path keeps the SQL cell arithmetic, which tests/test_fused.py checks against
+the fused kernel's numpy ``hexgrid.latlon_to_cell``.
+
 Cheap Column predicates (size caps, lang filters) run BEFORE UDF stages —
 Catalyst can't push a filter through mapInPandas, so stage order is the
 pushdown (SURVEY.md §4 'cheap predicate first').

@@ -90,6 +90,22 @@ def test_geoparse_offsets_slice_back():
     assert t[m["start"] : m["end"]] == "1.500000, 2.500000"
 
 
+def test_mentions_batch_matches_per_doc_loop():
+    texts = [None, *PDF.text.iloc[:300], "", 'geo:1.5,2.5 40°26\'46.0"N 79°58\'56.0"W']
+    want = [
+        (j, i, m["lat"], m["lon"], m["kind"], m["start"], m["end"])
+        for j, t in enumerate(texts)
+        for i, m in enumerate(gp.parse_mentions(t))
+    ]
+    b = gp.mentions_batch(texts)
+    cols = ("row", "mention_idx", "lat", "lon", "kind", "start_byte", "end_byte")
+    assert list(b) == list(cols)
+    assert list(zip(*(b[c].tolist() for c in cols))) == want
+    assert {w[4] for w in want} == {"dec", "geo", "dms"}
+    empty = gp.mentions_batch([None, ""])
+    assert all(len(v) == 0 for v in empty.values())
+
+
 def test_gazetteer_find_places():
     names = synth.GAZ_NAMES[:5]
     t = f"visit {names[0]} and {names[3]} soon"
